@@ -207,25 +207,22 @@ ORDER BY c_custkey
 
 
 def q_anti_join_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-23 ★ cuckoo backend (operators/cuckoo.py — BASELINE.json's
-    "cuckoo/bloom URL-seen"): customers with no URGENT order, routed
-    through the REAL executor-side cuckoo prefilter (build → shard-cogroup
-    probe → exact residual anti-join). The operator's contract is equality
-    with the plain anti-join for any filter contents — exactly what the
-    DuckDB NOT EXISTS oracle checks."""
-    from maga_spark.operators.cuckoo import anti_join_cuckoo
+    """O-23 ★ seen-set membership against a filtered seen side: customers
+    with no URGENT order, through the engine's exact anti-join
+    (operators/seen.py ``anti_join_exact``). The registry key predates the
+    removal of the cuckoo-filter prefilter, which always ended in this same
+    exact anti-join; the query keeps the key and the DuckDB NOT EXISTS
+    oracle."""
+    from maga_spark.operators.seen import anti_join_exact
 
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
-    seen = (
-        orders.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("url_hash"))
-        .distinct()
-        .select(F.pmod("url_hash", F.lit(8)).cast("int").alias("shard"), "url_hash")
+    seen = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
+        F.col("o_custkey").alias("url_hash")
     )
     cands = customer.select(F.col("c_custkey").alias("url_hash"), "c_name")
     return (
-        anti_join_cuckoo(cands, seen, nshards=8)
+        anti_join_exact(cands, seen)
         .select(F.col("url_hash").alias("c_custkey"), "c_name")
         .orderBy("c_custkey")
     )
@@ -1902,10 +1899,8 @@ FROM g ORDER BY doc_id
 
 
 def q_crawl_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THREE full crawl epochs in BLOOM seen-mode on generated fixtures
-    (engine smoke inside the driver harness — exercises the incremental
-    executor-side bloom state end-to-end) — returns the multi-epoch
-    ordering."""
+    """THREE full crawl epochs on generated fixtures (engine smoke inside
+    the driver harness) — returns the multi-epoch ordering."""
     import os
     import tempfile
 
@@ -1919,7 +1914,7 @@ def q_crawl_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(d, "politeness.parquet")):
         generate(d, n_urls=500, n_seeds=12)
     cfg = CrawlConfig(epochs=3, global_k=32)
-    eng = CrawlEngine(spark, d, cfg, seen_mode="bloom")
+    eng = CrawlEngine(spark, d, cfg)
     res = eng.run(collect_ordering=True)
     # rows-only BY DESIGN (justification: the epoch loop is iterative +
     # stateful — one SQL statement can't express the engine) — but the query

@@ -204,13 +204,12 @@ def build_minhash_index(
     portable: bool = True,
 ) -> DataFrame:
     """Materialize the corpus's LSH band rows as a STORED near-dup index —
-    the incremental-state analog of ``update_shard_blooms`` /
-    ``append_to_ivf_index`` for dedup: a growing corpus dedupes each NEW
-    ingest batch against this index (``query_minhash_index``) in
-    O(batch-bands ⋈ index) instead of re-running the corpus×corpus
-    self-join every batch. Persist with ``.write.partitionBy("band")`` so
-    serving prunes to the probed bands; at cluster scale, bucket on
-    ``bh`` for a shuffle-free probe join."""
+    the incremental-state analog of ``append_to_ivf_index`` for dedup: a
+    growing corpus dedupes each NEW ingest batch against this index
+    (``query_minhash_index``) in O(batch-bands ⋈ index) instead of
+    re-running the corpus×corpus self-join every batch. Persist with
+    ``.write.partitionBy("band")`` so serving prunes to the probed bands;
+    at cluster scale, bucket on ``bh`` for a shuffle-free probe join."""
     return minhash_band_rows(df, id_col, text_col, num_hashes, bands, shingle_k, portable)
 
 
@@ -734,9 +733,9 @@ def build_fingerprint_index(
     and makes every later sharing join bucket-aligned: the self-join in
     ``containment_pairs_from_index`` runs with ZERO Exchange — both sides
     are the same catalog table, already co-partitioned and sorted on the
-    join key (plan-pinned in test_bucketstore). Same storage idiom as the
-    bucketed seen set (plans/bucketstore.py) and the minhash band index
-    (build_minhash_index): state tables carry their partitioning on disk.
+    join key (plan-pinned in test_rank_redirects). Same storage idiom as
+    the minhash band index (build_minhash_index): state tables carry their
+    partitioning on disk.
     ``mode='append'`` absorbs new documents per-bucket without rewriting
     history."""
     from maga_spark.operators.text import winnow_fingerprint_portable

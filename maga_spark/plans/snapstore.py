@@ -90,7 +90,7 @@ def read_manifest(root: str, epoch: int) -> dict:
         return json.load(f)
 
 
-def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, seen_mode: str = "exact", epoch: int | None = None):
+def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, epoch: int | None = None):
     """Rebuild a CrawlEngine from the latest (or given) committed snapshot;
     the next ``run()`` continues at epoch+1. Partial (un-renamed) snapshot
     dirs are invisible — kill-at-any-point safe (tests/test_snapstore.py)."""
@@ -101,26 +101,11 @@ def resume(spark: SparkSession, root: str, fixtures_dir: str, cfg, seen_mode: st
         raise FileNotFoundError(f"no committed snapshots under {root}")
     epoch = epochs[-1] if epoch is None else epoch
     base = os.path.join(root, f"epoch={epoch}")
-    eng = CrawlEngine(spark, fixtures_dir, cfg, seen_mode=seen_mode, snapshot_dir=root)
+    eng = CrawlEngine(spark, fixtures_dir, cfg, snapshot_dir=root)
     eng.frontier = spark.read.parquet(os.path.join(base, "frontier"))
     eng.seen = spark.read.parquet(os.path.join(base, "seen"))
     eng.host_state = spark.read.parquet(os.path.join(base, "host_state"))
     eng._pending = spark.read.parquet(os.path.join(base, "pending"))
-    if seen_mode == "bloom":
-        # blooms are derived state (exactly the seen key set) — rebuild
-        # once from the restored seen table rather than snapshotting the
-        # bitsets; subsequent epochs grow them incrementally again
-        from maga_spark.operators.seen import build_shard_blooms
-
-        eng.blooms = build_shard_blooms(eng.seen, m_bits=cfg.bloom_m_bits)
-    elif seen_mode == "cuckoo":
-        # same derived-state rule as the blooms; the stored geometry must
-        # match the config the engine will keep inserting with
-        from maga_spark.operators.cuckoo import build_shard_cuckoo
-
-        eng.cuckoo = build_shard_cuckoo(
-            eng.seen, nbuckets=cfg.cuckoo_nbuckets, fp_bits=cfg.cuckoo_fp_bits
-        )
     eng._start_epoch = epoch + 1
     return eng
 

@@ -26,8 +26,8 @@ def golden(fixtures_dir):
     return sim_run(fixtures_dir, CFG)
 
 
-def _run_engine(spark, fixtures_dir, seen_mode="exact"):
-    eng = CrawlEngine(spark, fixtures_dir, CFG, seen_mode=seen_mode)
+def _run_engine(spark, fixtures_dir):
+    eng = CrawlEngine(spark, fixtures_dir, CFG)
     res = eng.run(collect_ordering=True)
     return eng, res
 
@@ -57,26 +57,6 @@ def test_seen_set_bit_for_bit(exact_run, golden):
 def test_metrics_match(exact_run, golden):
     _eng, res = exact_run
     assert res.metrics == golden.metrics
-
-
-def test_bloom_path_identical(spark, fixtures_dir, golden):
-    """Bloom-prefiltered seen membership must be bit-exact (no false
-    negatives ⇒ same final set and ordering — SURVEY.md §7.4)."""
-    eng, res = _run_engine(spark, fixtures_dir, seen_mode="bloom")
-    assert res.ordering == golden.ordering
-    got = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}
-    assert got == golden.seen
-
-
-def test_cuckoo_path_identical(spark, fixtures_dir, golden):
-    """Cuckoo-prefiltered seen membership must be bit-exact too — the
-    second filter backend BASELINE.json names ("cuckoo/bloom URL-seen"),
-    incremental across epochs like the blooms, same exact-residual
-    contract (operators/cuckoo.py)."""
-    eng, res = _run_engine(spark, fixtures_dir, seen_mode="cuckoo")
-    assert res.ordering == golden.ordering
-    got = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}
-    assert got == golden.seen
 
 
 def test_parallelism_independence(fixtures_dir, golden, tmp_path):
@@ -112,35 +92,34 @@ spark.stop()
 
 
 def test_adaptive_host_joins_no_forced_broadcast(spark, fixtures_dir, golden):
-    """VERDICT r3 #1: above cfg.broadcast_host_limit the host-keyed state
-    joins (politeness / robots_agg / host_state) must carry NO broadcast
-    hint (AQE decides from runtime sizes); results stay bit-exact. Also
-    exercises the scheduler skew-guard fallback in the same run
-    (topk_skew_factor=0 forces the sampled top-K from epoch 1 on) — both
-    adaptive paths together must still reproduce the golden crawl."""
+    """VERDICT r3 #1: the host-keyed state joins (politeness / robots_agg /
+    host_state) carry NO broadcast hint (AQE decides from runtime sizes);
+    results stay bit-exact. Also exercises the scheduler skew-guard
+    fallback in the same run (topk_skew_factor=0 forces the sampled top-K
+    from epoch 1 on) — both adaptive paths together must still reproduce
+    the golden crawl."""
     import dataclasses
     import warnings as _warnings
 
-    cfg = dataclasses.replace(
-        CFG, broadcast_host_limit=0, topk_skew_factor=0.0, topk_skew_min_rows=0
-    )
+    cfg = dataclasses.replace(CFG, topk_skew_factor=0.0, topk_skew_min_rows=0)
+    # mechanical hint check: plan one epoch (no job runs) and walk the
+    # analyzed plan — no host-keyed join may take a broadcast-hinted side
+    probe = CrawlEngine(spark, fixtures_dir, cfg)
+    probe._absorb(spark.read.parquet(f"{fixtures_dir}/seeds.parquet").select("url"), 0)
+    granted, _stats = probe._schedule(0)
+    stack, host_joins = [granted._jdf.queryExecution().analyzed()], 0
+    while stack:
+        node = stack.pop()
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if node.getClass().getSimpleName() == "Join" and "host#" in node.simpleString(25):
+            host_joins += 1
+            assert not any(k.getClass().getSimpleName() == "ResolvedHint" for k in kids)
+        stack += kids
+    assert host_joins >= 3  # robots, politeness, host_state
+    for t in probe._epoch_temps:
+        t.unpersist()
+
     eng = CrawlEngine(spark, fixtures_dir, cfg)
-    assert eng._host_bcast is False
-    # mechanical hint check: the broadcast wrapper must be absent from the
-    # analyzed plan of a host-side join input
-    plan = eng._host_side(eng.politeness)._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in plan
-    # the DEFAULT is the no-hint mode (broadcast_host_limit=0 — the 16M
-    # A/B measured the forced hint a dead heat, BENCH.md); a positive
-    # limit above the fixture host count re-enables the hint
-    default_eng = CrawlEngine(spark, fixtures_dir, CFG)
-    assert default_eng._host_bcast is False
-    hint_eng = CrawlEngine(
-        spark, fixtures_dir, dataclasses.replace(CFG, broadcast_host_limit=1_000_000)
-    )
-    assert hint_eng._host_bcast is True
-    plan_b = hint_eng._host_side(hint_eng.politeness)._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in plan_b
 
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")

@@ -96,47 +96,3 @@ def test_rlez_rejects_bitflip_or_differs(data):
         assert out != data
     except Exception:
         pass
-
-
-# ---- cuckoo-filter model check (operators/cuckoo.py) -----------------------
-# The engine's bit-for-bit seen parity rests on ONE property: the filter
-# NEVER yields a false negative, across any interleaving of batch inserts
-# and deletes of previously-inserted keys. Model-check it against a plain
-# Python multiset of live keys.
-
-_key64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["ins", "del"]), st.lists(_key64, min_size=0, max_size=60)),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_cuckoo_no_false_negatives_under_insert_delete(ops):
-    from maga_spark.operators.cuckoo import _contains, _delete_hashes, _insert_hashes
-
-    table = np.zeros((1 << 9, 4), dtype=np.uint16)  # 2048 slots
-    live: set[int] = set()
-    for op, keys in ops:
-        ks = np.unique(np.array(keys, dtype=np.int64).view(np.uint64))
-        if op == "ins":
-            batch = np.array(sorted(int(k) for k in ks if int(k) not in live), dtype=np.uint64)
-            if len(live) + len(batch) > 1600:  # stay under ~0.8 load
-                batch = batch[: max(0, 1600 - len(live))]
-            if len(batch):
-                _insert_hashes(table, batch, 16)
-                live.update(int(k) for k in batch)
-        else:
-            batch = np.array(sorted(int(k) for k in ks if int(k) in live), dtype=np.uint64)
-            if len(batch):
-                _delete_hashes(table, batch, 16)
-                live.difference_update(int(k) for k in batch)
-        # the invariant the engine depends on: every live key probes True
-        if live:
-            lv = np.array(sorted(live), dtype=np.uint64)
-            assert _contains(table, lv, 16).all(), "false negative!"
-        # slot accounting never drifts (inserts raise rather than drop)
-        assert int((table != 0).sum()) == len(live)

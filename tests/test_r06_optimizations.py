@@ -112,7 +112,7 @@ def test_engine_state_partitions_stay_bounded(spark, tmp_path):
     fx = str(tmp_path / "fx")
     generate(fx, n_urls=400, n_seeds=16, n_images=32, rate_boost=4)
     cfg = CrawlConfig(epochs=4, global_k=50, nshards=4)
-    eng = CrawlEngine(spark, fx, cfg, seen_mode="exact")
+    eng = CrawlEngine(spark, fx, cfg)
     cap = spark.sparkContext.defaultParallelism
     for _ in range(4):
         eng.run(epochs=1, collect_ordering=False, collect_metrics=False)

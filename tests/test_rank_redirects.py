@@ -1,6 +1,7 @@
 """Link-graph authority (pagerank), redirect-chain resolution, winnow
-containment pairs, and magic-byte sniffing — the round-4 crawl-analytics
-additions. Each is verified against an independent in-Python oracle."""
+containment pairs (ad hoc and from the bucketed fingerprint index), and
+magic-byte sniffing — the round-4 crawl-analytics additions. Each is
+verified against an independent in-Python oracle."""
 
 from __future__ import annotations
 
@@ -127,6 +128,69 @@ def test_containment_hot_fingerprint_cap(spark):
     capped = containment_pairs(df, min_containment=0.2, max_doc_freq=10).count()
     assert capped < uncapped
     assert capped == 0  # nothing but the boilerplate is shared
+
+
+def test_fingerprint_index_matches_adhoc_and_is_exchange_free(spark, tmp_path):
+    """build_fingerprint_index + containment_pairs_from_index: identical
+    results to the ad-hoc containment_pairs, with the sharing self-join
+    consuming BOTH sides from the bucketed catalog table — zero Exchange
+    under the join (winnow hashes computed once at ingest, never again)."""
+    from maga_spark.operators.dedup import (
+        build_fingerprint_index,
+        containment_pairs,
+        containment_pairs_from_index,
+    )
+
+    small = "the quick brown fox jumps over the lazy dog near the river bank today"
+    docs = [(1, small), (2, "padding before. " + small + " padding after with more words"),
+            (3, "entirely different content with no shared phrasing at all here")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    try:
+        build_fingerprint_index(df, "fp_idx_test", str(tmp_path / "fp_idx"), n_buckets=4)
+        out = containment_pairs_from_index(spark, "fp_idx_test", min_containment=0.3)
+        want = containment_pairs(df, min_containment=0.3)
+        got_rows = sorted(((r.u, r.v, r.shared, r.fp_u, round(r.containment, 9)) for r in out.collect()))
+        want_rows = sorted(((r.u, r.v, r.shared, r.fp_u, round(r.containment, 9)) for r in want.collect()))
+        assert got_rows == want_rows and got_rows  # same pairs, non-empty
+
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        # the h-keyed self-join takes both sides straight from buckets: the
+        # only hash Exchanges left belong to the (u,v) and size aggregates
+        join_part = plan.split("SortMergeJoin")[-1]
+        assert "Exchange hashpartitioning(h" not in join_part
+        assert "Bucketed: true" in plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fp_idx_test")
+
+
+def test_fingerprint_index_append_and_doc_freq_cap(spark, tmp_path):
+    from maga_spark.operators.dedup import (
+        build_fingerprint_index,
+        containment_pairs_from_index,
+    )
+
+    boiler = "standard legal boilerplate notice applies to this document entirely"
+    batch1 = spark.createDataFrame(
+        [(i, f"unique content number {i} about topic {i * 7} " * 3 + boiler) for i in range(10)],
+        "doc_id long, text string",
+    )
+    batch2 = spark.createDataFrame(
+        [(i, f"unique content number {i} about topic {i * 7} " * 3 + boiler) for i in range(10, 20)],
+        "doc_id long, text string",
+    )
+    try:
+        build_fingerprint_index(batch1, "fp_idx_app", str(tmp_path / "fp_app"), n_buckets=4)
+        base = containment_pairs_from_index(spark, "fp_idx_app", min_containment=0.2).count()
+        build_fingerprint_index(batch2, "fp_idx_app", str(tmp_path / "fp_app"), mode="append", n_buckets=4)
+        grown = containment_pairs_from_index(spark, "fp_idx_app", min_containment=0.2).count()
+        assert grown > base  # new docs share the boilerplate with everyone
+        capped = containment_pairs_from_index(
+            spark, "fp_idx_app", min_containment=0.2, max_doc_freq=10
+        ).count()
+        assert capped == 0  # nothing but the boilerplate is shared
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fp_idx_app")
 
 
 def test_sniff_format_magic_bytes(spark):

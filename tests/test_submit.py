@@ -102,7 +102,7 @@ def test_zip_contains_whole_package(tmp_path, _):
         "maga_spark/__init__.py",
         "maga_spark/plans/frontier.py",
         "maga_spark/operators/seen.py",
-        "maga_spark/operators/cuckoo.py",
+        "maga_spark/plans/ckpt.py",
         "maga_spark/streaming/ingest.py",
     ):
         assert required in names

@@ -42,7 +42,6 @@ def main() -> None:
     ap.add_argument("--epochs", type=int, default=6)
     ap.add_argument("--global-k", type=int, default=64)
     ap.add_argument("--nshards", type=int, default=8)
-    ap.add_argument("--seen-mode", default="exact", choices=["exact", "bloom", "cuckoo"])
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--snapshot-dir", default=None)
     args = ap.parse_args()
@@ -58,9 +57,7 @@ def main() -> None:
         app_name="maga_spark_crawl", shuffle_partitions=args.shuffle_partitions
     )
     cfg = CrawlConfig(epochs=args.epochs, global_k=args.global_k, nshards=args.nshards)
-    eng = CrawlEngine(
-        spark, args.fixtures_dir, cfg, seen_mode=args.seen_mode, snapshot_dir=args.snapshot_dir
-    )
+    eng = CrawlEngine(spark, args.fixtures_dir, cfg, snapshot_dir=args.snapshot_dir)
     res = eng.run(collect_ordering=True)
     seen = {r["shard"]: list(r["hashes"]) for r in eng.seen_per_shard()}
     print(
@@ -69,7 +66,6 @@ def main() -> None:
                 "master": spark.sparkContext.master,
                 "pkg_path": maga_spark.__file__,  # proves the zip was the import source
                 "epochs": args.epochs,
-                "seen_mode": args.seen_mode,
                 "granted": len(res.ordering),
                 "fetched_valid": res.fetched_valid,
                 "seen_count": res.seen_count,
