@@ -65,6 +65,15 @@ def _ckpt_rdd(df: DataFrame):
     return None
 
 
+def _empty(spark: SparkSession, **cols: str) -> DataFrame:
+    """An empty table with columns ``name=sql_type`` as an empty JVM
+    LocalRelation. ``createDataFrame([], schema)`` would instead put a
+    Python-backed RDD (a parallelize job on Python workers) under every
+    plan that reads the table."""
+    select = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in cols.items())
+    return spark.sql(f"SELECT {select} WHERE false")
+
+
 @dataclass
 class EngineResult:
     ordering: list = field(default_factory=list)  # (epoch, rank, url_canon)
@@ -103,10 +112,15 @@ class CrawlEngine:
         self.links = _side("links")
         self.images = _side("images")
         self.truth = _side("images_truth")
-        self.politeness = spark.read.parquet(f"{fixtures_dir}/politeness.parquet")
+        # host-sized tables: persisted without a spread (no action at init;
+        # the first epoch's commit fills the cache) so later epochs neither
+        # re-scan politeness.parquet nor re-run the robots aggregation
+        self.politeness = spark.read.parquet(f"{fixtures_dir}/politeness.parquet").persist()
         robots = spark.read.parquet(f"{fixtures_dir}/robots.parquet")
-        self.robots_agg = robots.groupBy("host").agg(
-            F.collect_list("disallow_prefix").alias("prefixes")
+        self.robots_agg = (
+            robots.groupBy("host")
+            .agg(F.collect_list("disallow_prefix").alias("prefixes"))
+            .persist()
         )
         # Host-keyed state (politeness / robots_agg / host_state) is bounded
         # by the DISTINCT HOST count, not the URL universe — broadcast-sized
@@ -116,10 +130,11 @@ class CrawlEngine:
         # AQE chooses from runtime sizes and still auto-broadcasts small
         # host tables (a forced hint measured a dead heat at 16M, BENCH.md).
 
-        empty = spark.createDataFrame
-        self.frontier = empty([], "url_hash long, url_canon string, host string, path string")
-        self.seen = empty([], "shard int, url_hash long")
-        self.host_state = empty([], "host string, tokens int, epoch int")
+        self.frontier = _empty(
+            spark, url_hash="bigint", url_canon="string", host="string", path="string"
+        )
+        self.seen = _empty(spark, shard="int", url_hash="bigint")
+        self.host_state = _empty(spark, host="string", tokens="int", epoch="int")
         self._pending: DataFrame | None = None  # discovery batch for the next absorb
         self._epoch_temps: list[DataFrame] = []  # persisted intra-epoch temporaries
         # internal RDDs behind the CURRENT generation of state checkpoints —
@@ -133,6 +148,22 @@ class CrawlEngine:
         self.topk_fallback_active = False
 
     # ---------- epoch stages ----------
+
+    def _epoch_table(self, epoch: int) -> DataFrame:
+        """The epoch's 1-row parameter table (cur_epoch, cur_target).
+
+        Epoch + target enter the plan as a broadcast table, NOT literals:
+        literal epochs make every epoch's generated code textually unique,
+        so whole-stage codegen recompiles the whole pipeline each epoch —
+        a driver-serial cost measured in BENCH.md. As columns, the code is
+        identical across epochs, and the codegen cache hits as long as it
+        holds the epoch's whole working set (~165 classes; session.py pins
+        spark.sql.codegen.cache.maxEntries above Spark's 100). The inline
+        VALUES table is a JVM LocalRelation: its values are rows, not
+        literals, and building it runs no Python job."""
+        return self.spark.sql(
+            f"VALUES ({epoch}, CAST({epoch_target(epoch)} AS BIGINT)) AS t(cur_epoch, cur_target)"
+        )
 
     def _absorb(self, raw: DataFrame, epoch: int) -> RobustObservation:
         """Canonicalize → dedup → anti-join seen → robots gate → append.
@@ -197,14 +228,7 @@ class CrawlEngine:
         reads them only after ``_commit_state`` (reading earlier would
         block forever — no job has scanned these plans yet)."""
         cfg = self.cfg
-        # epoch + target enter as a broadcast 1-row table, NOT literals:
-        # literal epochs make every epoch's generated code textually unique,
-        # so whole-stage codegen recompiles the whole pipeline each epoch —
-        # a driver-serial cost measured in BENCH.md. As columns, the code is
-        # identical across epochs and the janino cache hits.
-        epoch_df = self.spark.createDataFrame(
-            [(epoch, epoch_target(epoch))], "cur_epoch int, cur_target long"
-        )
+        epoch_df = self._epoch_table(epoch)
         # SLIM ranking rows: url_canon/path never enter the scheduling
         # shuffles (2 windows + range partition over frontier-sized rows);
         # they are joined back onto the ≤global_k granted keys afterwards.
@@ -359,13 +383,15 @@ class CrawlEngine:
         return discoveries, fetch_obs
 
     def _commit_state(self, discoveries: DataFrame) -> None:
-        """Inter-epoch lineage truncation: one localCheckpoint per state
-        table, the four submitted CONCURRENTLY (independent DAGs — one
-        scheduler wave instead of four serial jobs; round-1's sequential
-        submission was the biggest slice of the per-epoch serial floor).
-        A fused tagged-union single-job variant was measured 4× SLOWER at
-        small scale — AQE turns the deep union-of-joins into sequential
-        stage materializations — so four shallow concurrent jobs it is."""
+        """Inter-epoch lineage truncation: one localCheckpoint per table
+        (pending discoveries, seen, frontier, host_state) in two scheduler
+        waves: the pending checkpoint alone, then the three state tables
+        submitted CONCURRENTLY (independent DAGs — one wave instead of
+        three serial jobs; round-1's fully sequential submission was the
+        biggest slice of the per-epoch serial floor). A fused tagged-union
+        single-job variant was measured 4× SLOWER at small scale — AQE
+        turns the deep union-of-joins into sequential stage
+        materializations — so shallow jobs it is."""
         # Two dependency-aware waves, NOT one four-wide wave: Spark's block
         # manager does not block concurrent computation of the same cached
         # partition, so submitting all four at once makes frontier /

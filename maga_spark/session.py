@@ -5,6 +5,12 @@ shuffle partitions, UTC session timezone, AQE + Arrow on. Local mode is the
 test harness; the same confs apply unchanged under ``spark-submit`` on a real
 cluster (partition counts are taken from ``spark.sql.shuffle.partitions`` so a
 cluster deployment only overrides that one knob).
+
+``spark.sql.codegen.cache.maxEntries`` is a static, JVM-wide conf: Spark
+sizes its generated-class cache once, at the JVM's first codegen. A session
+built outside ``get_spark``/``get_submit_spark`` (or after another session
+has already generated code in the same JVM) keeps Spark's 100 entries, too
+few for one crawl epoch's working set, so every epoch recompiles its code.
 """
 
 from __future__ import annotations
@@ -25,6 +31,10 @@ PINNED_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # one crawl epoch generates ~165 distinct classes; Spark's default LRU of
+    # 100 evicts each before the next epoch reuses it (BENCH.md, "Codegen
+    # reuse across crawl epochs")
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 
